@@ -20,6 +20,7 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -48,6 +49,39 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+# Driver heap per local task slot. SCALE.md ("Driver JVM sizing"): the
+# JVM's 1g default starved 32 concurrent task threads with GC-locker
+# stalls on wide joins, and 24g cured it — 768 MiB per slot.
+_HEAP_MIB_PER_SLOT = 768
+# Spark's spark.driver.memoryOverheadFactor for non-JVM (PySpark) jobs:
+# the process needs heap * 1.4 of RAM, so the heap may claim at most
+# physical memory / 1.4 or the kernel OOM-kills the driver.
+_NON_JVM_OVERHEAD_FACTOR = 0.40
+
+
+def default_driver_memory(
+    slots: int, phys_bytes: int, override: str | None = None
+) -> str:
+    """``spark.driver.memory`` for a session running ``slots`` concurrent
+    tasks in the driver JVM on a machine with ``phys_bytes`` of RAM.
+
+    ``override`` (``SPARK_GRAFT_DRIVER_MEM``) wins verbatim. Otherwise
+    768 MiB per slot, but never more than physical memory can back once
+    the 0.40 non-JVM overhead is added.
+    """
+    if override:
+        return override
+    cap = int(phys_bytes / (1 + _NON_JVM_OVERHEAD_FACTOR)) >> 20
+    return f"{min(slots * _HEAP_MIB_PER_SLOT, cap)}m"
+
+
+def _local_slots(master: str) -> int:
+    """The N of a ``local[N]``/``local[N,F]`` master, else
+    ``default_parallelism()``."""
+    m = re.match(r"local\[(\d+)", master)
+    return int(m.group(1)) if m else default_parallelism()
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply dynamic SQL confs to an externally-created session.
 
@@ -70,16 +104,21 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cores = default_parallelism()
+    master = master or f"local[{cores}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cores}]")
-        # local[N] runs every task inside the driver JVM, whose default
-        # heap is 1g — starved at 32 concurrent tasks (GC-locker stalls
-        # kill tasks and their shuffle files on wide joins). Only takes
-        # effect when this factory launches the JVM; a driver-provided
-        # session keeps its own sizing.
+        .master(master)
+        # local[N] runs every task inside the driver JVM, so the heap is
+        # sized to the task slots and the machine (default_driver_memory).
+        # Only takes effect when this factory launches the JVM; a
+        # driver-provided session keeps its own sizing.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+            "spark.driver.memory",
+            default_driver_memory(
+                _local_slots(master),
+                os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"),
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM"),
+            ),
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
